@@ -15,9 +15,6 @@ import org.apache.spark.sql.functions._
  *   gen    --out DIR [--events N] [--convs N] [--chunks N] [--seed N]
  *   ingest --changelog DIR --table DIR [--checkpoint DIR] [--mode stream|batch]
  *          [--buckets N] [--max-files-per-trigger N] [--max-bytes-per-trigger B]
- *          [--source files|ledger]  # ledger = chunk-directory-offset source
- *                                   # (O(chunks) driver listing per trigger,
- *                                   # no seen-file map; 10^6+-file deployments)
  *          [--merge-mode cow|mor]   # mor = O(batch) delta commits + compaction
  *          [--follow-ms N]          # keep tailing the changelog (ProcessingTime
  *                                   # trigger) instead of drain-and-stop
@@ -50,14 +47,25 @@ import org.apache.spark.sql.functions._
  */
 object Main {
 
-  private def parseArgs(args: Array[String]): Map[String, String] =
+  private[graft] def parseArgs(args: Array[String]): Map[String, String] =
     args.drop(1).sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
     }.toMap
 
+  /** The error for a flag `cmd` no longer takes. `parseArgs` keeps unknown
+    * flags without complaint, so a removed one must be refused here or an
+    * old script would silently get different behaviour. */
+  private[graft] def removedFlag(cmd: String, opts: Map[String, String]): Option[String] =
+    if (cmd == "ingest" && opts.contains("source"))
+      Some("ingest --source: the chunk-ledger source was removed. ingest always " +
+        "tails the changelog with Spark's file source, where " +
+        "--max-files-per-trigger counts files, not chunk directories; drop --source")
+    else None
+
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { System.err.println("usage: gen|ingest|show|lineage ..."); sys.exit(2) }
     val opts = parseArgs(args)
+    removedFlag(args(0), opts).foreach { msg => System.err.println(msg); sys.exit(2) }
     val spark = GraftSession.get(opts.get("cores").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors()))
     try args(0) match {
@@ -83,10 +91,6 @@ object Main {
           // --follow-ms N keeps tailing the changelog dir at that poll
           // interval (runs until killed); default drains and stops
           followIntervalMs = opts.get("follow-ms").map(_.toLong),
-          // --source ledger tails via the chunk-directory-offset source
-          // (O(chunks) driver cost per trigger — the 10^6+-file shape);
-          // max-files-per-trigger then means max CHUNKS per trigger
-          ledgerSource = opts.get("source").contains("ledger"),
           // --retain-snapshots N enables the bounded-growth maintenance
           // loop a long-running --follow-ms deployment needs
           retention = opts.get("retain-snapshots").map(n =>

@@ -64,7 +64,6 @@ final case class PipelineOptions(
       * replaces the file-count trigger (Spark's file source treats the two
       * as alternative admission limits). */
     maxBytesPerTrigger: Option[Long] = None,
-    saltedDedup: Boolean = false,
     /** "cow" rewrites touched buckets per epoch (read-optimized); "mor"
       * appends delta files per epoch with O(batch) commit IO and defers the
       * cross-epoch reduce to read/compaction (write-optimized — the
@@ -88,15 +87,7 @@ final case class PipelineOptions(
     followIntervalMs: Option[Long] = None,
     /** Post-commit retention maintenance (None = unbounded growth — fine
       * for a bounded backfill, wrong for a follow-mode deployment). */
-    retention: Option[RetentionPolicy] = None,
-    /** Tail the changelog through [[graft.streaming.ChunkLedgerSource]]
-      * (offset = chunk-directory watermark; per-trigger driver cost is one
-      * O(chunks) dir listing, no seen-file map) instead of Spark's built-in
-      * file source (which re-lists the whole tree and tracks every file) —
-      * the 10^6+-changelog-file deployment shape. Requires the chunk-dir
-      * layout contract documented on the source. `maxFilesPerTrigger` is
-      * then interpreted as max CHUNKS per trigger. */
-    ledgerSource: Boolean = false)
+    retention: Option[RetentionPolicy] = None)
 
 /**
  * The end-to-end CDC pipeline: changelog tail -> dirty sideband -> LWW dedup
@@ -134,9 +125,6 @@ object CdcPipeline {
   def applyBatch(table: SnapTable, batch: DataFrame, epoch: Long,
       opts: PipelineOptions = PipelineOptions()): LineageRecord = {
     val t0 = System.nanoTime()
-    val debug = sys.env.contains("GRAFT_DEBUG_TIMING")
-    def mark(phase: String, since: Long): Unit = if (debug)
-      System.err.println(f"[pipeline-timing] $phase: ${(System.nanoTime() - since) / 1e9}%.2fs")
     // NOT cached: the accounting agg and the merge each scan the source
     // once, and a columnar parquet re-scan (pushdown + pruning) is ~10x
     // cheaper than materializing an InMemoryRelation of the batch (measured
@@ -170,7 +158,6 @@ object CdcPipeline {
       stats.enforce(opts.errorLimit)
       val touched = acct.filter(_.isNullAt(1))
         .flatMap(_.getSeq[Int](5)).toSet
-      mark("accounting", t0)
 
       val clean = tagged.filter(col(Dirty.ReasonCol).isNull).drop(Dirty.ReasonCol)
       // Enrichment runs as write-time DERIVED columns inside the merge —
@@ -180,18 +167,15 @@ object CdcPipeline {
       val derived = if (opts.enrich) enrichmentColumns else graft.table.Derived.none
       // No pre-merge dedup pass: the merge's own LWW aggregation reduces the
       // batch (with map-side partials) in the same shuffle that folds in the
-      // stored rows. Optional salted pre-reduce for pathological dup skew.
-      val toMerge =
-        if (opts.saltedDedup) Dedup.lwwSalted(clean, Schemas.mergeKeys, Schemas.lwwOrder)
-        else clean
+      // stored rows.
       val mergeResult = opts.mergeMode match {
         // stats.clean (counted in the accounting pass above — no extra
         // scan) lets the merge pick the derived-column regime: re-derive
         // winners while the replay batch dominates, carry stored values
         // once the table does
-        case "cow" => table.merge(toMerge, epoch, Some(touched), derived, Some(stats.clean))
+        case "cow" => table.merge(clean, epoch, Some(touched), derived, Some(stats.clean))
         case "mor" =>
-          val r = table.mergeDelta(toMerge, epoch, derived)
+          val r = table.mergeDelta(clean, epoch, derived)
           // Long arithmetic: a large configured threshold (e.g. MaxValue =
           // "never auto-compact") times the bucket count overflows Int and
           // would flip this into compact-every-epoch
@@ -346,7 +330,12 @@ object CdcPipeline {
       // writer commits a given epoch, so the displaced record can only be
       // this epoch's own earlier corpse.)
       try fs.delete(p, false) catch { case _: java.io.IOException => () }
-      if (!fs.rename(tmp, p)) fs.delete(tmp, false): Unit
+      if (!fs.rename(tmp, p)) {
+        System.err.println(s"[lineage] WARNING epoch ${rec.epoch}: could not " +
+          s"publish ${p.getName} (rename from ${tmp.getName} failed twice); " +
+          "the record is dropped")
+        fs.delete(tmp, false): Unit
+      }
     }
   }
 
@@ -360,24 +349,25 @@ object CdcPipeline {
     if (!fs.exists(dir)) return Seq.empty
     fs.listStatus(dir).toSeq.sortBy(_.getPath.getName).flatMap { st =>
       // dot-names are in-flight tmps (writeLineage publishes by rename);
-      // anything unparseable is a pre-atomic-publish torn corpse — skip it
-      // loudly rather than fail the whole observability read: lineage is a
-      // sideband, and the table's own epoch guard (not lineage) is what
-      // enforces exactly-once
+      // anything unparseable is a pre-atomic-publish torn corpse, and an
+      // entry that cannot be opened (vanished since the listing, or not a
+      // file) is no better — skip both loudly rather than fail the whole
+      // observability read: lineage is a sideband, and the table's own
+      // epoch guard (not lineage) is what enforces exactly-once
       if (st.getPath.getName.startsWith(".")) None
-      else {
+      else try {
         val in = fs.open(st.getPath)
         try {
           val bytes = new Array[Byte](st.getLen.toInt)
           in.readFully(bytes)
           Some(Serialization.read[LineageRecord](
             new String(bytes, StandardCharsets.UTF_8)))
-        } catch {
-          case scala.util.control.NonFatal(t) =>
-            System.err.println(s"[lineage] skipping torn record " +
-              s"${st.getPath.getName}: ${t.getMessage}")
-            None
         } finally in.close()
+      } catch {
+        case scala.util.control.NonFatal(t) =>
+          System.err.println(s"[lineage] skipping torn record " +
+            s"${st.getPath.getName}: ${t.getMessage}")
+          None
       }
     }
   }
@@ -399,34 +389,18 @@ object CdcPipeline {
    * otsstreamreader/.../config/StatusTableConstants.java:9-67). Restart with
    * the same checkpoint resumes from the first unprocessed file, and any
    * re-delivered epoch is skipped by the table's epoch guard.
+   *
+   * Producer contract: a changelog file appears under `changelogDir`
+   * atomically — written aside, then renamed into place. The file source
+   * admits every file a listing shows and never re-reads one, so a file
+   * still being written would be ingested torn. Spark's own parquet writer
+   * (commit by rename, as [[graft.gen.ChangeStreamGen.writeChangelog]]
+   * uses it) and a directory renamed in whole both satisfy this.
    */
   def stream(spark: SparkSession, changelogDir: String, table: SnapTable,
       checkpointDir: String, opts: PipelineOptions = PipelineOptions()): StreamingQuery = {
     val trigger = opts.followIntervalMs
       .map(ms => Trigger.ProcessingTime(ms)).getOrElse(Trigger.AvailableNow())
-    if (opts.ledgerSource) {
-      // chunk-ledger tail: the stream carries file MANIFEST rows (bounded:
-      // files of <= maxChunks chunk dirs per trigger); the batch body reads
-      // the listed parquet itself with the envelope schema, so pre-evolution
-      // files align exactly like the built-in path
-      val manifest = spark.readStream
-        .format(classOf[graft.streaming.ChunkLedgerSource].getName)
-        .option("path", changelogDir)
-        .option("maxChunksPerTrigger", math.max(1, opts.maxFilesPerTrigger))
-        .load()
-      return manifest.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .foreachBatch { (m: DataFrame, epoch: Long) =>
-          val paths = m.select("path").collect().map(_.getString(0))
-          if (paths.nonEmpty) {
-            val batch = spark.read.schema(Schemas.envelope)
-              .parquet(paths.toIndexedSeq: _*)
-            applyBatch(table, batch, epoch, opts): Unit
-          }
-        }
-        .start()
-    }
     val reader = spark.readStream
       .schema(Schemas.envelope)
       .option("recursiveFileLookup", "true")

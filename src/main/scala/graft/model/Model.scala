@@ -82,8 +82,4 @@ object Schemas {
     * duplicate keys across buckets). */
   val mergeKeyCanonicalTypes: Seq[(String, String)] =
     Seq("conv_id" -> "string", "turn_idx" -> "long")
-
-  /** Last-writer-wins ordering columns (ties on ts broken by lsn, never by
-    * arrival order — SURVEY.md §7.4 risk 3). */
-  val lwwOrder: Seq[String] = Seq("ts", "lsn")
 }

@@ -132,16 +132,14 @@ object JdbcSplit {
   def sampledSlices(pk: String, points: Seq[String], quoted: Boolean,
       nullSlice: Boolean = true): Seq[Slice] = {
     require(points.nonEmpty, "sampled split needs at least one point")
-    // numeric points arrive as decimal STRINGS (Oracle SAMPLE resultset,
-    // approxQuantile BigInts) — a lexicographic sort misorders mixed-width
-    // values ("1000" < "500"), which turns the sliding ranges into
-    // overlapping slices that read rows twice; sort by numeric value
-    // whenever every point parses as one
+    // the slices must follow the DATABASE's order of the column: numeric
+    // points arrive as decimal STRINGS (Oracle SAMPLE resultset,
+    // approxQuantile BigInts) and a lexicographic sort misorders mixed-width
+    // values ("1000" < "500"), while a quoted (string) column compares
+    // exactly that way even when every value is digits. Either mismatch
+    // turns the sliding ranges into overlapping slices that read rows twice
     val distinct = points.distinct
-    val sorted =
-      if (distinct.forall(p => scala.util.Try(BigDecimal(p)).isSuccess))
-        distinct.sortBy(BigDecimal(_))
-      else distinct.sorted
+    val sorted = if (quoted) distinct.sorted else distinct.sortBy(BigDecimal(_))
     val first = Slice(pk, None, Some(sorted.head), hiInclusive = false, quoted = quoted)
     val mids = sorted.sliding(2).collect { case Seq(lo, hi) =>
       Slice(pk, Some(lo), Some(hi), hiInclusive = false, quoted = quoted)

@@ -538,13 +538,6 @@ final class SnapTable private (val root: String, fs: FileSystem) {
   private def mergeAttempt(batch: DataFrame, epoch: Long, knownTouched: Option[Set[Int]],
       derived: Derived, batchRowsHint: Option[Long]): Option[MergeResult] = {
     val spark = batch.sparkSession
-    val debug = sys.env.contains("GRAFT_DEBUG_TIMING")
-    var tMark = System.nanoTime()
-    def mark(phase: String): Unit = if (debug) {
-      val now = System.nanoTime()
-      System.err.println(f"[merge-timing] $phase: ${(now - tMark) / 1e9}%.2fs")
-      tMark = now
-    }
     val snap = snapshot()
     requireBucketFn(snap)
     if (epoch <= snap.lastEpoch) return Some(MergeResult.SkippedEpoch)
@@ -567,7 +560,6 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     // 2. copy-on-write only the touched buckets.
     val touched = knownTouched.getOrElse(
       alignedBare.select(BucketCol).distinct().collect().map(_.getInt(0)).toSet)
-    mark("touched-buckets")
     val (rewrite, keep) = snap.files.partition(f => touched(f.bucket))
 
     // Two regimes for derived columns (measured both ways, see merge's
@@ -606,11 +598,9 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       SnapTable.applyDerived(winners, derived)
         .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$commitRel")
     }
-    mark("merge-write")
 
     // 5. manifest the written files (rows counted from parquet footers).
     val written = listBucketFiles(spark, s"$root/$commitRel", commitRel, newSchemaV)
-    mark("manifest-files")
     val newRows = written.map(_.rows).sum + keep.map(_.rows).sum
     beforeCommitHook()
     val committed = tryCommit(Snapshot(

@@ -29,6 +29,17 @@ class CdcEndToEndSpec extends SparkSpec {
   private def oracleState(events: Seq[ChangeEvent]): Seq[(String, Int, String)] =
     OracleReducer.reduce(events).map(e => (e.conv_id, e.turn_idx, e.text))
 
+  /** The parquet data files under a changelog directory, at any depth. */
+  private def partFiles(dir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.flatMap(s =>
+        if (s.isDirectory) walk(s.getPath)
+        else if (s.getPath.getName.startsWith("part-")) Seq(s) else Nil)
+    walk(new org.apache.hadoop.fs.Path(dir))
+  }
+
   test("generator is deterministic") {
     val a = ChangeStreamGen.events(spark, cfg).orderBy("pos", "lsn").collect()
     val b = ChangeStreamGen.events(spark, cfg).orderBy("pos", "lsn").collect()
@@ -80,37 +91,40 @@ class CdcEndToEndSpec extends SparkSpec {
     assert(lineage.forall(l => l.partitions.forall(p => p.minLsn <= p.maxLsn)))
   }
 
+  // The tail over the chunk=NNNNN changelog is Spark's file source. The four
+  // tests below keep the names they had while a separate chunk-ledger source
+  // existed, and check the same behaviours on the file source.
+
   test("chunk-ledger source: streaming replay matches oracle, rate-limited offsets") {
     val log = tmpDir("changelog")
     ChangeStreamGen.writeChangelog(spark, cfg, log)
     val t = SnapTable.create(spark, tmpDir("table"), Schemas.payloadV2, numBuckets = 16)
-    // 2 chunk dirs per trigger -> ceil(6/2) = 3 epochs to drain
+    // 3 files per trigger -> ceil(files / 3) epochs to drain
     val q = CdcPipeline.stream(spark, log, t, tmpDir("ckpt"),
-      PipelineOptions(maxFilesPerTrigger = 2, ledgerSource = true))
+      PipelineOptions(maxFilesPerTrigger = 3))
     q.awaitTermination()
     assert(tableState(t) == oracleState(collectEvents()))
-    val committed = CdcPipeline.readLineage(spark, t).filter(_.result == "committed")
-    assert(committed.size == 3, s"expected 3 rate-limited epochs, got ${committed.size}")
+    val files = partFiles(log).size
+    val committed = CdcPipeline.readLineage(spark, t).count(_.result == "committed")
+    assert(committed == (files + 2) / 3, s"$files part files at 3 per trigger")
   }
 
   test("chunk-ledger source: crash-resume from the chunk-offset checkpoint") {
-    // many small chunks: the stop must land MID-stream, and a fast drain
-    // (1 chunk/trigger x 12) leaves ~10 epochs of headroom after the first
-    // committed version triggers the stop
+    // stop mid-stream at 1 file per trigger, resume at 4: the checkpointed
+    // offsets, not the admission rate, decide where the restart picks up
     val midCfg = cfg.copy(chunks = 12)
     val log = tmpDir("changelog")
     ChangeStreamGen.writeChangelog(spark, midCfg, log)
     val t = SnapTable.create(spark, tmpDir("table"), Schemas.payloadV2, numBuckets = 16)
     val ckpt = tmpDir("ckpt")
-    val opts = PipelineOptions(maxFilesPerTrigger = 1, ledgerSource = true)
-    val q1 = CdcPipeline.stream(spark, log, t, ckpt, opts)
+    val q1 = CdcPipeline.stream(spark, log, t, ckpt, PipelineOptions(maxFilesPerTrigger = 1))
     var waited = 0
     while (t.currentVersion < 1 && waited < 600) { Thread.sleep(100); waited += 1 }
     q1.stop(); q1.awaitTermination()
     val midVersion = t.currentVersion
     assert(midVersion >= 1 && midVersion < midCfg.chunks, s"mid-stream stop at $midVersion")
-    val q2 = CdcPipeline.stream(spark, log, t, ckpt, opts)
-    q2.awaitTermination()
+    CdcPipeline.stream(spark, log, t, ckpt, PipelineOptions(maxFilesPerTrigger = 4))
+      .awaitTermination()
     assert(tableState(t) == oracleState(collectEvents(midCfg)))
     val committed = CdcPipeline.readLineage(spark, t)
       .filter(_.result == "committed").map(_.epoch)
@@ -118,19 +132,14 @@ class CdcEndToEndSpec extends SparkSpec {
   }
 
   test("chunk-ledger source: mid-stream schema evolution aligns pre-evolution chunks") {
-    // the generator physically writes chunks that end before the evolution
-    // point WITHOUT the `tool` column; the ledger path's batch body reads
-    // the manifest-listed files itself, so it must align those files to the
-    // envelope (tool = null) exactly like the built-in file source — and
-    // the table, started on the PRE-evolution schema, must widen mid-stream
+    // files written before the evolution point lack `tool`: the stream must
+    // align them to null and widen a table started on the PRE-evolution schema
     val log = tmpDir("changelog")
     ChangeStreamGen.writeChangelog(spark, cfg, log)
     val t = SnapTable.create(spark, tmpDir("table"), Schemas.payloadV1, numBuckets = 16)
-    val q = CdcPipeline.stream(spark, log, t, tmpDir("ckpt"),
-      PipelineOptions(maxFilesPerTrigger = 2, ledgerSource = true))
-    q.awaitTermination()
-    val sch = t.read(spark).schema
-    assert(sch.fieldNames.contains("tool"))
+    CdcPipeline.stream(spark, log, t, tmpDir("ckpt"),
+      PipelineOptions(maxFilesPerTrigger = 2)).awaitTermination()
+    assert(t.read(spark).schema.fieldNames.contains("tool"))
     assert(t.read(spark).filter(col("tool").isNotNull).count() > 0)
     assert(tableState(t) == oracleState(collectEvents()))
   }
@@ -140,12 +149,12 @@ class CdcEndToEndSpec extends SparkSpec {
     ChangeStreamGen.writeChangelog(spark, cfg, log)
     val t = SnapTable.create(spark, tmpDir("table"), Schemas.payloadV2, numBuckets = 16)
     val ckpt = tmpDir("ckpt")
-    val opts = PipelineOptions(maxFilesPerTrigger = 3, ledgerSource = true)
+    val opts = PipelineOptions(maxFilesPerTrigger = 3)
     CdcPipeline.stream(spark, log, t, ckpt, opts).awaitTermination()
     val baseEvents = collectEvents()
     assert(tableState(t) == oracleState(baseEvents))
-    // new chunk dirs arrive with lexicographically later names (the
-    // ledger contract); offsets resume past the drained ones
+    // a tail renamed in after the drain: a second drain on the same
+    // checkpoint admits only the new files
     val tailCfg = cfg.copy(numEvents = 4000, chunks = 2,
       lsnOffset = baseEvents.map(_.lsn).max + 1)
     ChangeStreamGen.writeChangelog(spark, tailCfg, tmpDir("tail")).zipWithIndex
@@ -154,9 +163,10 @@ class CdcEndToEndSpec extends SparkSpec {
         assert(new java.io.File(dir).renameTo(dst), s"move $dir -> $dst")
       }
     CdcPipeline.stream(spark, log, t, ckpt, opts).awaitTermination()
-    val allEvents = baseEvents ++
-      ChangeStreamGen.events(spark, tailCfg).drop("pos").as[ChangeEvent].collect()
-    assert(tableState(t) == oracleState(allEvents))
+    assert(tableState(t) == oracleState(baseEvents ++ collectEvents(tailCfg)))
+    val committed = CdcPipeline.readLineage(spark, t)
+      .filter(_.result == "committed").map(_.epoch)
+    assert(committed.distinct.size == committed.size, "no epoch applied twice")
   }
 
   test("epoch replay is idempotent (exactly-once)") {
@@ -273,15 +283,7 @@ class CdcEndToEndSpec extends SparkSpec {
   test("byte-rate throttle bounds per-epoch input (Channel bps parity)") {
     val log = tmpDir("changelog")
     ChangeStreamGen.writeChangelog(spark, cfg, log)
-    val totalBytes = {
-      val fs = new org.apache.hadoop.fs.Path(log)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      def walk(p: org.apache.hadoop.fs.Path): Long =
-        fs.listStatus(p).map(s =>
-          if (s.isDirectory) walk(s.getPath)
-          else if (s.getPath.getName.startsWith("part-")) s.getLen else 0L).sum
-      walk(new org.apache.hadoop.fs.Path(log))
-    }
+    val totalBytes = partFiles(log).map(_.getLen).sum
     val t = SnapTable.create(spark, tmpDir("table"), Schemas.payloadV2, numBuckets = 16)
     val q = CdcPipeline.stream(spark, log, t, tmpDir("ckpt"),
       PipelineOptions(maxBytesPerTrigger = Some(totalBytes / 4)))
@@ -342,6 +344,8 @@ class CdcEndToEndSpec extends SparkSpec {
     // corpse) and an in-flight dot-tmp: the reader must skip both
     fs.create(new org.apache.hadoop.fs.Path(dir, "epoch-00000007.json"), true).close()
     fs.create(new org.apache.hadoop.fs.Path(dir, ".tmp-epoch-00000009-1.json"), true).close()
+    // and an entry that cannot be opened at all: skipped, the rest returned
+    fs.mkdirs(new org.apache.hadoop.fs.Path(dir, "epoch-00000099.json"))
     val recs = CdcPipeline.readLineage(spark, t)
     assert(recs.map(_.epoch) == Seq(0L) && recs.head.result == "committed")
   }

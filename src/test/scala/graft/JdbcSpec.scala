@@ -107,6 +107,12 @@ class JdbcSpec extends SparkSpec {
       })
       assert(hits == 1, s"$v matched $hits slices")
     }
+    // the same points on a QUOTED (string) column keep the database's
+    // string order, where "1000" < "1500" < "500"
+    val strSlices = JdbcSplit.sampledSlices("pk", Seq("500", "1000", "1500"), quoted = true)
+    assert(strSlices.map(_.toSql) == Seq(
+      "pk < '1000'", "pk >= '1000' AND pk < '1500'", "pk >= '1500' AND pk < '500'",
+      "pk >= '500'", "pk IS NULL"))
   }
 
   test("shard-table pattern expansion and table-mode slice multiplier") {
@@ -359,6 +365,27 @@ class JdbcSpec extends SparkSpec {
     assert(ranged.count() == 100)
     val rCounts = ranged.rdd.mapPartitions(it => Iterator.single(it.size)).collect()
     assert(rCounts.max >= 85, s"range slicing should collapse under skew: ${rCounts.toSeq}")
+  }
+
+  test("reader lane: sampled split of a VARCHAR pk of digit strings follows string order") {
+    import org.json4s.jackson.JsonMethods.parse
+    val conn = derby("digitstrdb")
+    conn.createStatement().execute("CREATE TABLE digitstr (pk VARCHAR(8), v INT)")
+    val ins = conn.prepareStatement("INSERT INTO digitstr VALUES (?, ?)")
+    // '500', '1000', ..., '20000': mixed-width digit strings, so numeric
+    // and string order disagree at the sampled boundaries
+    val pks = (1 to 40).map(i => (i * 500).toString)
+    pks.foreach { k => ins.setString(1, k); ins.setInt(2, k.toInt); ins.executeUpdate() }
+    conn.close()
+    val df = graft.job.JdbcLane.read(spark, parse(s"""{
+      "username": "app", "password": "app",
+      "connection": [{"jdbcUrl": "jdbc:derby:memory:digitstrdb", "table": ["digitstr"]}],
+      "splitPk": "pk", "splitMode": "sampled"}"""), channels = 4)
+    val read = df.select("PK").collect().map(_.getString(0)).toSeq
+    assert(read.sorted == pks.sorted, "every row read exactly once")
+    // the trailing partition is the IS NULL slice (no null pks here)
+    val counts = df.rdd.mapPartitions(it => Iterator.single(it.size)).collect().toSeq
+    assert(counts.size == 5 && counts.init.forall(_ > 0), s"empty range slice: $counts")
   }
 
   test("DRDS dialect: mandatory session SQL reaches the reader properties") {
